@@ -100,7 +100,10 @@ def images_pdf_for_indices(
     + x/y/lon/lat. keep_px=True adds a `px_ref` column carrying the generated
     pixel arrays (Python-side consumers only — never ship it through Arrow):
     roundtrip checks need the pre-encode reference, and regenerating it costs
-    as much as the procedural render itself (~0.35 ms/image, round 8)."""
+    as much as the procedural render itself (~0.35 ms/image, round 8).
+    keep_px requires with_payload (no pixels are rendered without it)."""
+    if keep_px and not with_payload:
+        raise ValueError("keep_px=True requires with_payload=True")
     idx = np.asarray(idx, dtype=np.int64)
     n = len(idx)
     x, y = points_for_indices(idx, seed)
@@ -138,7 +141,7 @@ def images_pdf_for_indices(
         "lon": lon,
         "lat": lat,
     }
-    if keep_px and with_payload:
+    if keep_px:
         cols["px_ref"] = pxs
     return pd.DataFrame(cols)
 

@@ -250,6 +250,8 @@ _ENCODERS = {"raw": encode_raw, "ppm": encode_ppm, "png": encode_png, "qdct": en
 
 
 def encode_image(px: np.ndarray, fmt: str) -> bytes:
+    """Encoders (and phash64) must not mutate `px`: roundtrip checks reuse
+    the encoded array as their reference (test-pinned in test_codecs)."""
     return _ENCODERS[fmt](px)
 
 

@@ -11,8 +11,18 @@ md5, groupBy) so they scale JVM-side with no Python worker in the path:
                       keys bucket-join candidate pairs
   simhash_expr      — n-bit SimHash as generated arithmetic (portable to the
                       DuckDB oracle dialect — no bitwise ops)
+  hamming_pairs     — pigeonhole-banded pairs within a Hamming bound over an
+                      integer sketch (pigeonhole_band_keys)
   ngram_jaccard_pairs — exact set-Jaccard over shingles for pair subsets
   decontaminate     — benchmark-overlap removal (broadcast shingle semi-join)
+
+ONE pair builder: `_bucket_pairs` is the only code in lagespark that joins
+band-key tables — (id, band, band_key, _bks, *payload) rows from
+band_keys_md5 / band_keys_fast / pigeonhole_band_keys here, and
+similarity._sign_sketch_keys for sign-LSH (cosine_pairs_lsh, lsh_topk) — and
+it emits each pair from its FIRST colliding band, so no pair-stream
+distinct is needed. That min-band dedup assumes UNIQUE ids on each join
+side (the corpus contract).
 
 Scale notes: minhash_pairs shuffles (doc, band_key) — at 10^12 docs the band
 key space is huge and uniform (md5), so the shuffle partitions evenly; the
@@ -374,51 +384,60 @@ def minhash_pairs(
     signature. bands = perms / band_rows. Each doc explodes to one row per
     band key; the self-join runs per (band, key) bucket — at scale the key
     space is uniform (md5) so the shuffle partitions evenly."""
-    return _bucket_pairs(
-        band_keys_md5(df, id_col, text_col, perms, band_rows, n, all_keys=True),
-        id_col,
-        n_bands=perms // band_rows,
-    )
+    keys = band_keys_md5(df, id_col, text_col, perms, band_rows, n, all_keys=True)
+    return _bucket_pairs(keys, perms // band_rows).filter(F.col("a") < F.col("b"))
 
 
-def _bucket_pairs(keys: DataFrame, id_col: str, n_bands: int | None = None) -> DataFrame:
-    """(id, band, band_key) → distinct candidate pairs (a < b) sharing a
-    bucket, via a SELF-JOIN of the lazily-checkpointed key table.
+def _bucket_pairs(
+    keys: DataFrame, n_bands: int, other: DataFrame | None = None
+) -> DataFrame:
+    """THE pair builder: every LSH and pigeonhole pair finder in lagespark
+    (minhash_pairs[_fast], hamming_pairs, similarity.cosine_pairs_lsh /
+    lsh_topk, image_ops.phash_neardup_pairs) joins its band-key tables here
+    and nowhere else.
+
+    Input: key tables of the form (id, band, band_key, _bks, *payload) — id
+    FIRST, one row per (row, band), `_bks` the row's full `n_bands`-long
+    band-key array (band_keys_md5 / band_keys_fast / pigeonhole_band_keys
+    with all_keys=True, similarity._sign_sketch_keys). `other=None` self-joins
+    `keys`; otherwise `keys` (→ a) joins `other` (→ b), banded identically.
+    Output: (a, b, *payload_a, *payload_b), payload column c renamed c_a /
+    c_b. The caller adds its own id filter — a < b for a self-join, a != b
+    (qid != nn_id) for a two-sided join.
 
     Why a self-join and not collect_list + double explode: a hot bucket of k
-    docs explodes k² pair rows out of ONE collect_list row — a single task
+    rows explodes k² pair rows out of ONE collect_list row — a single task
     (real corpora have giant duplicate clusters; the harness documents have
     a 2,699-doc bucket that serialized 7M rows through one thread). The
     equi-join streams each key row independently, so hot-bucket output is
     generated across ALL partitions holding those rows (broadcast probe at
-    this size; SMJ + AQE skew-split at cluster scale). The checkpoint makes
-    the (skinny — id + 2 keys) table compute its signature subplan ONCE for
-    both join sides.
+    this size; SMJ + AQE skew-split at cluster scale). A self-join's key
+    table is lazily checkpointed so its subplan (signature fold, sketch
+    UDF) computes ONCE for both join sides.
 
-    Pair dedup (round 8): when the key table carries the full band-key
-    array (`_bks`, all_keys=True in band_keys_*) and the caller passes
-    `n_bands`, a pair is emitted ONLY from the FIRST band whose keys
+    Pair dedup: a pair is emitted ONLY from the FIRST band whose keys
     collide — a pure map-side filter on the join output, so the quadratic
-    candidate stream never shuffles again (the old `.distinct()`
-    hash-aggregated + exchanged up-to-bands× the pair volume; guide §2.4
-    "remove shuffles outright"). The filter is a flat OR chain of
-    element_at comparisons — NOT slice/zip_with/exists, which allocate two
-    sliced arrays per joined row and measured SLOWER than the distinct it
-    replaces (sf0.1 A/B: distinct ~1.5 s, HOF filter ~4.8 s, element_at
-    chain ~0.8 s). Join-bucket membership is DEFINED by band_key equality,
-    so checking earlier bands' keys reproduces exactly the distinct pair
-    set — given unique doc ids (the corpus contract; the DuckDB oracle's
-    GROUP BY doc_id signature assumes the same). Without `_bks`/`n_bands`
-    the distinct fallback remains."""
-    keys = keys.localCheckpoint(eager=False)
-    has_all = "_bks" in keys.columns and n_bands is not None
-    extra_a = [F.col("_bks").alias("_ka")] if has_all else []
-    extra_b = [F.col("_bks").alias("_kb")] if has_all else []
-    a = keys.select(F.col(id_col).alias("a"), "band", "band_key", *extra_a)
-    b = keys.select(F.col(id_col).alias("b"), "band", "band_key", *extra_b)
-    j = a.join(b, ["band", "band_key"]).filter(F.col("a") < F.col("b"))
-    if not has_all:
-        return j.select("a", "b").distinct()
+    candidate stream never shuffles again (a post-join distinct /
+    dropDuplicates hash-aggregates + exchanges up-to-bands× the pair
+    volume; guide §2.4 "remove shuffles outright"). The filter is a flat OR
+    chain of element_at comparisons — NOT slice/zip_with/exists, which
+    allocate two sliced arrays per joined row and measured SLOWER than the
+    distinct it replaces (sf0.1 A/B: distinct ~1.5 s, HOF filter ~4.8 s,
+    element_at chain ~0.8 s). Join-bucket membership is DEFINED by band_key
+    equality, so checking earlier bands' keys reproduces exactly the
+    distinct pair set — given UNIQUE ids on each side (the corpus contract;
+    the DuckDB oracle's GROUP BY doc_id signature assumes the same)."""
+    if other is None:
+        keys = other = keys.localCheckpoint(eager=False)
+
+    def side(t: DataFrame, s: str) -> DataFrame:
+        pay = [c for c in t.columns[1:] if c not in ("band", "band_key", "_bks")]
+        return t.select(
+            F.col(t.columns[0]).alias(s), "band", "band_key",
+            F.col("_bks").alias(f"_k{s}"), *[F.col(c).alias(f"{c}_{s}") for c in pay],
+        )
+
+    a, b = side(keys, "a"), side(other, "b")
     # band is 0-based; element_at is 1-based, so _ka[i] is band i-1's key:
     # row at band b collides earlier iff any i <= b has _ka[i] == _kb[i]
     earlier = F.lit(False)
@@ -426,7 +445,11 @@ def _bucket_pairs(keys: DataFrame, id_col: str, n_bands: int | None = None) -> D
         earlier = earlier | (
             (F.col("band") >= i) & (F.element_at("_ka", i) == F.element_at("_kb", i))
         )
-    return j.filter(~earlier).select("a", "b")
+    return (
+        a.join(b, ["band", "band_key"])
+        .filter(~earlier)
+        .select("a", "b", *a.columns[4:], *b.columns[4:])
+    )
 
 
 def minhash_pairs_fast(
@@ -450,11 +473,8 @@ def minhash_pairs_fast(
     one codegen projection per document, no shingle-row explosion and no
     groupBy shuffle; the only shuffle in the whole operator is the (band,
     band_key) bucket groupBy, whose keys are uniform int64."""
-    return _bucket_pairs(
-        band_keys_fast(df, id_col, text_col, perms, band_rows, n, all_keys=True),
-        id_col,
-        n_bands=perms // band_rows,
-    )
+    keys = band_keys_fast(df, id_col, text_col, perms, band_rows, n, all_keys=True)
+    return _bucket_pairs(keys, perms // band_rows).filter(F.col("a") < F.col("b"))
 
 
 def band_keys_fast(
@@ -857,6 +877,72 @@ def minhash_jaccard_pairs(
     )
 
 
+def pigeonhole_band_keys(
+    df: DataFrame,
+    sketch_col: str,
+    id_col: str,
+    bits: int,
+    n_bands: int,
+    keep: tuple[str, ...] = (),
+    all_keys: bool = False,
+) -> DataFrame:
+    """(id, band, band_key, *keep): pigeonhole banding of an integer sketch.
+    The low `bits` bits split into `n_bands` disjoint chunks (low chunk
+    first, widths differing by at most one bit); any pair within hamming
+    < n_bands agrees on at least one chunk. The one band-key builder behind
+    hamming_pairs (max_hamming+1 bands), image_ops.phash_neardup_pairs
+    (the 64-bit pHash as 4×16-bit bands) and streaming image ingest dedup
+    (streaming.ops.dedup_stream_phash / ingest_claims_batch_phash) — the
+    pigeonhole counterpart of band_keys_fast. all_keys=True carries the
+    chunk array as `_bks` (min-band pair dedup, _bucket_pairs). The explode
+    is posexplode_OUTER for the same reason as band_keys_md5's: the array
+    is never empty, and a plain posexplode would infer a size() filter."""
+    base, extra = divmod(bits, n_bands)
+    widths = [base + (1 if b < extra else 0) for b in range(n_bands)]
+    chunks = [
+        F.shiftright(F.col(sketch_col), sum(widths[:b]))
+        .bitwiseAND(F.lit((1 << widths[b]) - 1))
+        .cast("bigint")
+        for b in range(n_bands)
+    ]
+    arr = df.select(
+        F.col(id_col), F.array(*chunks).alias("_bks"), *[F.col(c) for c in keep]
+    )
+    return arr.select(
+        id_col,
+        F.posexplode_outer("_bks").alias("band", "band_key"),
+        *(["_bks"] if all_keys else []),
+        *keep,
+    )
+
+
+def _pigeonhole_pairs(
+    df: DataFrame,
+    sketch_col: str,
+    id_col: str,
+    bits: int,
+    n_bands: int,
+    max_hamming: int,
+) -> DataFrame:
+    """(a, b, hamming) with hamming ≤ max_hamming among pairs that share a
+    pigeonhole band — exact (the all-pairs result) when max_hamming <
+    n_bands. The sketch rides the bucket join as payload and the refine is
+    native bit_count(xor): pure Catalyst end-to-end."""
+    keys = pigeonhole_band_keys(
+        df, sketch_col, id_col, bits, n_bands, keep=(sketch_col,), all_keys=True
+    )
+    ham = F.bit_count(
+        F.col(f"{sketch_col}_a").bitwiseXOR(F.col(f"{sketch_col}_b"))
+    ).cast("int")
+    return (
+        _bucket_pairs(keys, n_bands)
+        .filter(F.col("a") < F.col("b"))
+        .withColumn("hamming", ham)
+        .filter(F.col("hamming") <= max_hamming)
+        .select("a", "b", "hamming")
+    )
+
+
 def hamming_pairs(
     df: DataFrame,
     sketch_col: str,
@@ -867,62 +953,13 @@ def hamming_pairs(
     """Near-duplicate pairs (a, b, hamming) over an integer sketch WITHOUT an
     all-pairs join: pigeonhole banding. Split the `bits`-bit sketch into
     max_hamming+1 disjoint chunks — any pair within hamming ≤ max_hamming
-    must agree on at least one chunk — equi-join on (band, chunk_value),
-    refine with native bit_count(xor). Same shape as
-    image_ops.phash_neardup_pairs; pure Catalyst end-to-end.
+    must agree on at least one chunk — bucket-join on (band, chunk)
+    (_bucket_pairs), refine with native bit_count(xor).
 
     Scale: the shuffle key is (band, chunk) — uniform for hash-like
     sketches, so buckets stay small and the in-bucket pair expansion is
-    bounded. Pairs come from a self-join of the lazily-checkpointed key
-    table (not collect_list + double explode): a hot bucket — e.g. many
-    byte-identical images sharing one sketch — would otherwise emit its k²
-    pair rows from a single task (see _bucket_pairs); the checkpoint keeps
-    the sketch subplan computed once for both sides."""
-    n_bands = max_hamming + 1
-    base, extra = divmod(bits, n_bands)
-    widths = [base + (1 if b < extra else 0) for b in range(n_bands)]
-    offsets = [sum(widths[:b]) for b in range(n_bands)]
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col(sketch_col), offsets[b])
-                .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                .alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    keyed = df.select(
-        F.col(id_col), F.col(sketch_col).alias("_sk"), F.explode(bands).alias("bk")
-    ).select(
-        id_col, "_sk", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    ).localCheckpoint(eager=False)
-    a = keyed.select(F.col(id_col).alias("a"), F.col("_sk").alias("_ska"), "band", "key")
-    b = keyed.select(F.col(id_col).alias("b"), F.col("_sk").alias("_skb"), "band", "key")
-    pairs = a.join(b, ["band", "key"]).filter(F.col("a") < F.col("b"))
-    ham = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
-    # min-band pair dedup (round 8, same construction as _bucket_pairs): a
-    # pair is emitted ONLY from the first chunk that agrees — the earlier
-    # chunks are recomputable from the carried sketches, so the dedup is a
-    # map-side filter and the pair stream never shuffles (the old
-    # .distinct() exchanged it). Unique ids assumed (corpus contract).
-    def chunk(col: str, b: int):
-        return F.shiftright(F.col(col), offsets[b]).bitwiseAND(
-            F.lit((1 << widths[b]) - 1)
-        )
-
-    earlier = F.lit(False)
-    for bprev in range(n_bands - 1):
-        earlier = earlier | (
-            (F.col("band") > bprev) & (chunk("_ska", bprev) == chunk("_skb", bprev))
-        )
-    return (
-        pairs.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .filter(~earlier)
-        .select("a", "b", "hamming")
-    )
+    bounded."""
+    return _pigeonhole_pairs(df, sketch_col, id_col, bits, max_hamming + 1, max_hamming)
 
 
 def duplicate_components(

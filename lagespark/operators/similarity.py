@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lagespark.operators import dedup
+
 _NN_T = ArrayType(
     StructType(
         [
@@ -172,6 +174,43 @@ def cosine_pairs(
     )
 
 
+def _sign_sketch_keys(
+    df: DataFrame, id_col: str, vec_col: str, planes: int, tables: int, dim: int, seed: int
+) -> DataFrame:
+    """(id, band, band_key, _bks): the dedup._bucket_pairs key table of a
+    seeded random-hyperplane sign-LSH sketch — band = table t, band_key =
+    t's key, packing t << 59 with the `planes` sign bits (equal seeds give
+    equal hyperplanes, so two tables keyed alike bucket alike). t << 59
+    (not 60) fits int64 for tables <= 16 (15<<59 < 2^63) and stays disjoint
+    from the plane bits; t<<60 overflows for t >= 8 (NumPy >= 2.0 raises
+    OverflowError in the executor UDF).
+
+    SKINNY: only ids and keys ride the ×tables explosion through the
+    bucket-join shuffle (at scale the vectors would otherwise be replicated
+    tables× on both sides of the exchange); callers join vectors back per
+    pair. posexplode_OUTER: a plain posexplode infers a size(_bks) filter
+    that predicate pushdown rewrites into a second evaluation of the UDF."""
+    if tables > 16 or planes > 59:
+        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
+    pl = np.random.default_rng(seed).normal(size=(tables, planes, dim))
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def sketches(v: pd.Series) -> pd.Series:
+        m = np.stack(v.to_numpy()).astype(np.float64)
+        keys = []
+        for t in range(tables):
+            signs = (m @ pl[t].T) > 0  # (B, planes)
+            val = np.full(len(m), t << 59, dtype=np.int64)
+            for j in range(planes):
+                val |= signs[:, j].astype(np.int64) << j
+            keys.append(val)
+        return pd.Series(np.stack(keys, axis=1).tolist())
+
+    return df.select(F.col(id_col), sketches(F.col(vec_col)).alias("_bks")).select(
+        id_col, F.posexplode_outer("_bks").alias("band", "band_key"), "_bks"
+    )
+
+
 def cosine_pairs_lsh(
     df: DataFrame,
     threshold: float,
@@ -195,39 +234,8 @@ def cosine_pairs_lsh(
     bucket occupancy) — candidate volume per table is Σ k_bucket², so
     buckets must stay small as N grows. Injected-duplicate recall is
     asserted in tests."""
-    if tables > 16 or planes > 59:
-        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
-    rng = np.random.default_rng(seed)
-    pl = rng.normal(size=(tables, planes, dim))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sketches(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        keys = []
-        for t in range(tables):
-            signs = (m @ pl[t].T) > 0
-            # t << 59 (not 60): fits int64 for tables<=16 (15<<59 < 2^63) and
-            # stays disjoint from the plane bits; t<<60 overflows for t>=8
-            # (NumPy >=2.0 raises OverflowError in the executor UDF)
-            val = np.full(len(m), t << 59, dtype=np.int64)
-            for j in range(planes):
-                val |= signs[:, j].astype(np.int64) << j
-            keys.append(val)
-        return pd.Series(np.stack(keys, axis=1).tolist())
-
-    # skinny bucket join: ids only through the sketch explosion + self-join
-    # + dedup; embedding vectors join back per side AFTER dedup (one row per
-    # pair, not one per shared bucket)
-    keyed = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "bucket", F.explode(sketches(F.col(vec_col)))
-    )
-    a = keyed.select(F.col(id_col).alias("a"), "bucket")
-    b = keyed.select(F.col(id_col).alias("b"), "bucket")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    keys = _sign_sketch_keys(df, id_col, vec_col, planes, tables, dim, seed)
+    pairs = dedup._bucket_pairs(keys, tables).filter(F.col("a") < F.col("b"))
     vecs = df.select(F.col(id_col), F.col(vec_col))
     cand = pairs.join(
         vecs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va")), "a"
@@ -552,43 +560,16 @@ def lsh_topk(
     (bucket count = 2^planes caps per-bucket candidate volume) and `tables`
     together; clustered real-world embeddings reach the same recall with
     far fewer tables."""
-    if tables > 16 or planes > 59:
-        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
-    rng = np.random.default_rng(seed)
-    pl = rng.normal(size=(tables, planes, dim))
-
-    out_t = ArrayType(LongType())
-
-    @F.pandas_udf(out_t)
-    def sketches(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        keys = []
-        for t in range(tables):
-            signs = (m @ pl[t].T) > 0  # (B, planes)
-            # t << 59: see cosine_pairs_lsh — t<<60 overflows int64 for t>=8
-            val = np.full(len(m), t << 59, dtype=np.int64)
-            for j in range(planes):
-                val |= signs[:, j].astype(np.int64) << j
-            keys.append(val)
-        return pd.Series(np.stack(keys, axis=1).tolist())
-
-    # skinny bucket join (same shape as cosine_pairs_lsh): only (id, bucket)
-    # rides the ×`tables` explosion through the bucket-join shuffle — at scale
-    # the embedding vectors would otherwise be replicated `tables`× on BOTH
-    # sides of the exchange. Vectors join back per candidate pair AFTER the
-    # (qid, nn_id) dedup, one row per pair.
     qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
     tv = targets.select(F.col(id_col).alias("nn_id"), F.col(vec_col).alias("tv"))
-    qk = qv.withColumn("bucket", F.explode(sketches(F.col("qv")))).select(
-        "qid", "bucket"
-    )
-    tk = tv.withColumn("bucket", F.explode(sketches(F.col("tv")))).select(
-        "nn_id", "bucket"
-    )
     pairs = (
-        qk.join(tk, "bucket")
-        .filter(F.col("qid") != F.col("nn_id"))
-        .dropDuplicates(["qid", "nn_id"])
+        dedup._bucket_pairs(
+            _sign_sketch_keys(qv, "qid", "qv", planes, tables, dim, seed),
+            tables,
+            _sign_sketch_keys(tv, "nn_id", "tv", planes, tables, dim, seed),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .select(F.col("a").alias("qid"), F.col("b").alias("nn_id"))
     )
     cand = _repartition_for_kernel(pairs.join(qv, "qid").join(tv, "nn_id"))
 

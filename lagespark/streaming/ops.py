@@ -373,10 +373,12 @@ def ingest_claims_batch_phash(
     claims over the 4×16-bit pHash pigeonhole bands (same window semantics
     as ingest_claims_batch — earliest (order_col, id) row owns each band
     key, later holders claim it, self-claims filtered)."""
-    from lagespark.operators import image_ops
+    from lagespark.operators import dedup, image_ops
 
     keep = (order_col,) if order_col else ()
-    keys = image_ops.phash_band_keys(images, id_col, phash_col, keep=keep)
+    keys = dedup.pigeonhole_band_keys(
+        images, phash_col, id_col, image_ops.PHASH_BITS, image_ops.PHASH_BANDS, keep
+    )
     return _claims_batch_from_keys(keys, id_col, order_col)
 
 
@@ -625,9 +627,11 @@ def dedup_stream_phash(
     ingest_claims_batch_phash(order_col="ts") under monotone ingest
     (test-pinned, same contract as q104)."""
     imgs = images.withColumn("ts", F.col("ts").cast("timestamp"))
-    from lagespark.operators import image_ops
+    from lagespark.operators import dedup, image_ops
 
-    keys = image_ops.phash_band_keys(imgs, id_col, phash_col, keep=("ts",))
+    keys = dedup.pigeonhole_band_keys(
+        imgs, phash_col, id_col, image_ops.PHASH_BITS, image_ops.PHASH_BANDS, ("ts",)
+    )
     return _claims_stream(
         keys,
         id_col,

@@ -101,6 +101,27 @@ def test_phash_robust_to_qdct():
         assert d <= 4, f"phash hamming {d} after qdct for image {i}"
 
 
+@pytest.mark.parametrize("fmt", ["raw", "ppm", "png", "qdct"])
+def test_encoders_and_phash_leave_input_unchanged(fmt):
+    """image_ops.generate_and_check reuses the array it encoded and hashed
+    as the roundtrip reference — a codec mutating `px` in place would make
+    that check compare the output with itself."""
+    for _, px in _imgs():
+        before = px.copy()
+        codecs.encode_image(px, fmt)
+        codecs.phash64(px)
+        assert px.dtype == before.dtype and (px == before).all()
+
+
+def test_keep_px_without_payload_raises():
+    from lagespark import fixtures
+
+    with pytest.raises(ValueError, match="keep_px"):
+        fixtures.images_pdf_for_indices(np.arange(3), with_payload=False, keep_px=True)
+    rows = fixtures.images_pdf_for_indices(np.arange(3), keep_px=True)
+    assert [r.shape for r in rows["px_ref"]] == [(w, w, 3) for w in rows["w"]]
+
+
 def test_psnr_basics():
     px = codecs.procedural_image(2, 32, 32)
     assert codecs.psnr(px, px) == float("inf")

@@ -7,8 +7,10 @@ the oracle-portable md5 path."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +30,17 @@ def plan_of(df, mode="simple") -> str:
 def _assert_no_all_pairs(plan: str, what: str):
     assert "CartesianProduct" not in plan, f"{what}: all-pairs CartesianProduct"
     assert "BroadcastNestedLoopJoin" not in plan, f"{what}: nested-loop join"
+
+
+def _assert_no_pair_shuffle(plan: str, ids: tuple[str, str], what: str):
+    """No HashAggregate or Exchange keyed on BOTH pair ids: a pair-stream
+    distinct/dropDuplicates above the bucket join (pairs dedup map-side in
+    dedup._bucket_pairs instead)."""
+    keyed = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+    keyed += re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    for keys in keyed:
+        names = {re.sub(r"#\d+L?$", "", k.strip()) for k in keys.split(",")}
+        assert not set(ids) <= names, f"{what}: pair-stream shuffle on {keys}"
 
 
 def test_simhash_pairs_plan_is_banded(spark):
@@ -58,6 +71,28 @@ def test_phash_neardup_plan_is_banded(spark):
     imgs = image_ops.generate_with_neardups(spark, 64, partitions=4)
     df = image_ops.phash_neardup_pairs(imgs, max_hamming=6)
     _assert_no_all_pairs(plan_of(df), "phash pairs")
+
+
+def test_lsh_pair_finders_dedup_pairs_map_side(spark):
+    """cosine_pairs_lsh, lsh_topk and phash_neardup_pairs emit each pair
+    from its first colliding band: no aggregate/exchange on the pair ids
+    re-shuffles the candidate stream above the bucket join."""
+    from lagespark.operators import image_ops, similarity
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").limit(64)
+    _assert_no_pair_shuffle(
+        plan_of(similarity.cosine_pairs_lsh(e, threshold=0.85)), ("a", "b"),
+        "cosine_pairs_lsh",
+    )
+    _assert_no_pair_shuffle(
+        plan_of(similarity.lsh_topk(e.limit(8), e, k=3)), ("qid", "nn_id"),
+        "lsh_topk",
+    )
+    imgs = image_ops.generate_with_neardups(spark, 64, partitions=4)
+    _assert_no_pair_shuffle(
+        plan_of(image_ops.phash_neardup_pairs(imgs, max_hamming=6)), ("a", "b"),
+        "phash_neardup_pairs",
+    )
 
 
 def test_hamming_pairs_matches_bruteforce(spark):
@@ -209,19 +244,41 @@ def test_minhash_fast_vs_md5_candidates(spark):
     assert exact <= fast_pairs
 
 
-@pytest.mark.parametrize("bits,maxh", [(16, 1), (16, 3), (24, 2), (12, 4)])
-def test_hamming_pairs_matches_bruteforce_params(spark, bits, maxh):
-    from lagespark.operators import dedup
+@pytest.mark.parametrize(
+    "bits,maxh,finder",
+    [
+        pytest.param(16, 1, "hamming", id="16-1"),
+        pytest.param(16, 3, "hamming", id="16-3"),
+        pytest.param(24, 2, "hamming", id="24-2"),
+        pytest.param(12, 4, "hamming", id="12-4"),
+        # 4×16-bit pigeonhole bands are exact up to hamming 3
+        pytest.param(64, 3, "phash", id="phash-64-3"),
+    ],
+)
+def test_hamming_pairs_matches_bruteforce_params(spark, bits, maxh, finder):
+    from lagespark.operators import dedup, image_ops
 
-    mask = (1 << bits) - 1
-    rows = [(i, (i * 2654435761 + 17) % (mask + 1)) for i in range(120)]
-    df = spark.createDataFrame(rows, "doc_id long, simhash long")
-    banded = {
-        (r.a, r.b)
-        for r in dedup.hamming_pairs(df, "simhash", bits=bits, max_hamming=maxh).collect()
-    }
-    a = df.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"))
-    b = df.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"))
+    if finder == "phash":
+        # random 64-bit hashes plus 1..4-bit-flipped variants of each, so
+        # pairs sit on both sides of the threshold and across bands
+        rng = np.random.default_rng(3)
+        rows = []
+        for k, h in enumerate(rng.integers(0, 1 << 63, size=30).tolist()):
+            for j in range(5):
+                v = h ^ sum(1 << int(x) for x in rng.choice(64, size=j, replace=False))
+                rows.append((f"img{k:02d}{j}", v - (1 << 64) if v >= 1 << 63 else v))
+        df = spark.createDataFrame(rows, "image_id string, phash long")
+        id_col, sk = "image_id", "phash"
+        found = image_ops.phash_neardup_pairs(df, max_hamming=maxh)
+    else:
+        mask = (1 << bits) - 1
+        rows = [(i, (i * 2654435761 + 17) % (mask + 1)) for i in range(120)]
+        df = spark.createDataFrame(rows, "doc_id long, simhash long")
+        id_col, sk = "doc_id", "simhash"
+        found = dedup.hamming_pairs(df, sk, bits=bits, max_hamming=maxh)
+    banded = {(r.a, r.b) for r in found.collect()}
+    a = df.select(F.col(id_col).alias("a"), F.col(sk).alias("ha"))
+    b = df.select(F.col(id_col).alias("b"), F.col(sk).alias("hb"))
     naive = {
         (r.a, r.b)
         for r in a.crossJoin(b)
@@ -231,4 +288,5 @@ def test_hamming_pairs_matches_bruteforce_params(spark, bits, maxh):
         .select("a", "b")
         .collect()
     }
+    assert naive or finder == "hamming", "fixture must hold in-threshold pairs"
     assert banded == naive

@@ -160,7 +160,7 @@ def test_lsh_topk_plan_no_vectors_below_bucket_exchange(spark):
     bucket_exchanges = [
         b
         for b in plan.split("\n\n")
-        if "Exchange" in b and "hashpartitioning(bucket" in b
+        if "Exchange" in b and "hashpartitioning(band" in b
     ]
     assert bucket_exchanges, plan  # shuffle join forced above — must appear
     for block in bucket_exchanges:

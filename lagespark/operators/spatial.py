@@ -18,6 +18,8 @@ dim, so there is no fact-side shuffle at all in the PIP/zone/score path.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -511,12 +513,16 @@ def knn_join_points(
     exactly ONCE per query (the annulus never re-explodes the inner disk —
     with radius doubling, full-disk re-explosion would make the last round
     redo ~4× the total useful work). Returns (qid, nn_id, dist, rank).
-    Ties break deterministically on (dist, id). Queries with fewer than k
-    reachable targets after max_rounds return what exists. cell_size=None
+    Ties break deterministically on (dist, id). Queries still unfinished
+    after max_rounds (fewer than k reachable targets, or a k-th distance
+    beyond the last ring) return what exists, and a RuntimeWarning names
+    how many there are. cell_size=None
     (default) derives the grid from target density (knn_auto_cell_size) —
     the result is cell-size-independent, only round counts change."""
     from pyspark.sql import Window
 
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     # checkpoint the skinny target base ONCE (round 8): the target table is
     # re-joined in EVERY expansion round, and the density stats pass reads
     # it too — without persistence each of those re-runs the upstream plan
@@ -639,10 +645,18 @@ def knn_join_points(
             # exact when query ids are NOT unique — synthesized keys from
             # lineitem are not (CLAUDE.md), and under-decrementing would
             # waste all max_rounds on empty jobs.
-            if pending.count() == 0:
+            n_pending = pending.count()
+            if n_pending == 0:
                 return results
         rp, r = r, r * 2
-    # max_rounds exhausted: emit best-effort for the stragglers (sparse data)
+    # max_rounds exhausted (the last round always counts): emit best-effort
+    # for the stragglers (sparse data), and say so
+    warnings.warn(
+        f"knn_join_points: max_rounds={max_rounds} exhausted with {n_pending} "
+        "unfinished queries; their neighbors are best-effort",
+        RuntimeWarning,
+        stacklevel=2,
+    )
     return results.unionByName(topk.join(done, "qid", "left_anti")) if results is not None else topk
 
 
@@ -714,22 +728,32 @@ def knn_join(
 # ---------------------------------------------------------------------------
 
 
-def _repartition_for_kernel(df: DataFrame, mult: int = 8) -> DataFrame:
-    """Repartition a (typically skinny) DataFrame before a CPU-bound pandas
-    UDF stage. AQE sizes shuffle partitions by BYTES — after a join or
-    groupBy of small rows it coalesces to one or two partitions, which would
-    serialize the kernel. One extra cheap shuffle buys full parallelism.
+KERNEL_ROWS_PER_TASK = 1000
 
-    `mult` oversubscribes partitions beyond core count for LOAD BALANCING —
-    keep the default for kernels whose per-row cost varies (polygon clips:
-    vertex counts and cover multiplicities differ by orders of magnitude),
-    pass mult=1 for uniform per-row kernels (fixed-dim vector math): there
-    the extra tasks are pure Arrow/worker-invocation overhead — measured
-    2-3× on the sf0.1 similarity queries (q76 4.6→1.9 s, q76c 4.8→2.5 s,
-    q74b 3.8→1.9 s; round 8). Sizing stays cluster-proportional either way
-    (defaultParallelism-based)."""
+
+def _repartition_for_kernel(df: DataFrame, rows: int | None = None) -> DataFrame:
+    """Repartition a (typically skinny) DataFrame before a CPU-bound
+    polygon-kernel pandas UDF stage. AQE sizes shuffle partitions by BYTES —
+    after a join or groupBy of small rows it coalesces to one or two
+    partitions, which would serialize the kernel. One extra cheap shuffle
+    buys full parallelism.
+
+    The spread is sized by the stage's ROW COUNT `rows` (par =
+    defaultParallelism):
+
+        partitions = max(par, min(8·par, 256, ceil(rows / KERNEL_ROWS_PER_TASK)))
+
+    Up to 8× oversubscription LOAD-BALANCES the clip kernels at data scale
+    (vertex counts and cover multiplicities differ by orders of magnitude),
+    but every extra task costs a fixed Arrow/Python-worker round trip: a
+    trivial pandas UDF over 600 rows measured 0.55 s at 4 partitions vs
+    2.5 s at 32 (local[4], 4-vCPU VM). Under ~par·KERNEL_ROWS_PER_TASK rows
+    the floor gives one task per core. Callers without a count (rows=None)
+    get the full 8·par. Uniform per-row kernels (fixed-dim vector math) use
+    similarity._repartition_for_kernel instead — no oversubscription."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(max(par, min(mult * par, 256)))
+    want = 8 * par if rows is None else -(-rows // KERNEL_ROWS_PER_TASK)
+    return df.repartition(max(par, min(8 * par, 256, want)))
 
 
 def _bbox_cover_cells(df: DataFrame, cell_size: float, prefix: str) -> DataFrame:
@@ -954,17 +978,19 @@ def overlay_join(
         .select("id_l", "id_r", "area")
     )
 
+    n_gen = None
     if checkpoint_pairs:
         # data-adaptive branch elision (round 8, same discipline as
-        # intersects_join_ri's per-side rect probe): when every deduped pair
+        # intersects_join_ri's per-side rect counts): when every deduped pair
         # is rect×rect — the common all-rect cadastre case — the kernel
         # branch contributes NOTHING but still costs two broadcast builds
-        # (flat ring payloads), a 256-partition exchange and an
-        # ArrowEvalPython stage full of empty tasks. One limit(1) probe on
-        # the already-checkpointed pair list decides; mixed inputs pay only
-        # that probe. Only safe behind the checkpoint (the probe would
-        # otherwise recompute the cover join).
-        if cand.filter(~both_rect).limit(1).count() == 0:
+        # (flat ring payloads), an exchange and an ArrowEvalPython stage of
+        # empty tasks. One count on the already-checkpointed pair list
+        # decides, and on mixed inputs the same count sizes the kernel
+        # spread. Only safe behind the checkpoint (the count would otherwise
+        # recompute the cover join).
+        n_gen = cand.filter(~both_rect).count()
+        if n_gen == 0:
             return rect_res
 
     # non-rect pairs: enrich with FLAT ring payloads (one shuffle per side,
@@ -978,7 +1004,7 @@ def overlay_join(
         .join(lpay, "id_l")
         .join(rpay, "id_r")
     )
-    gen = _repartition_for_kernel(gen)
+    gen = _repartition_for_kernel(gen, n_gen)
 
     @F.pandas_udf(DoubleType())
     def inter_area(
@@ -1157,11 +1183,16 @@ def _mask_cover(
     return cov.localCheckpoint(eager=True)
 
 
-def _masks_over_cover(cov: DataFrame, cell_size: float, sub: int) -> DataFrame:
+def _masks_over_cover(
+    cov: DataFrame, cell_size: float, sub: int, gen_rows: int | None = None
+) -> DataFrame:
     """The two mask branches of ri_masks over a (checkpointed) cover frame.
     Split out so intersects_join_ri can build its masks over the SAME
     checkpointed cover that feeds its rect pair path and ambiguous payload
-    re-join (one cover build per side, however many consumers)."""
+    re-join (one cover build per side, however many consumers).
+
+    `gen_rows`, when the caller counted them, is the number of non-rect
+    cover rows: it sizes the kernel spread, and 0 drops the kernel branch."""
     sub_area = (cell_size / sub) ** 2
 
     @F.pandas_udf("a_mask int, f_mask int")
@@ -1224,47 +1255,48 @@ def _masks_over_cover(cov: DataFrame, cell_size: float, sub: int) -> DataFrame:
             f_out[k] = f
         return pd.DataFrame({"a_mask": a_out, "f_mask": f_out})
 
-    out_cols = [
-        "id", "cell", "rect",
-        "lxmin", "lymin", "lxmax", "lymax",
-        "a_mask", "f_mask",
-    ]
+    keep = ["id", "cell", "rect", "lxmin", "lymin", "lxmax", "lymax"]
 
     # native rect masks: same min/max arithmetic as the kernel's rect fast
-    # path, identical operation order and epsilons, but pure Catalyst
+    # path, identical operation order and epsilons, but pure Catalyst. Each
+    # mask is ONE F.expr SQL string (the Column-builder form issued ~1,700
+    # py4j round trips per side at sub=4; see _is_axis_rect). Every double
+    # literal carries the D suffix — a bare decimal parses as DECIMAL.
+    def d(v: float) -> str:
+        return f"{float(v)!r}D"
+
     step = cell_size / sub
-    shift = F.lit(1 << cells.GRID_SHIFT)
-    ci = (F.col("cell") / shift).cast("long") - cells.GRID_OFF
-    cj = F.col("cell") % shift - cells.GRID_OFF
-    x0 = ci.cast("double") * F.lit(cell_size)
-    y0 = cj.cast("double") * F.lit(cell_size)
+    shift, off = 1 << cells.GRID_SHIFT, cells.GRID_OFF
+    x0 = f"(CAST((CAST((cell / {shift}) AS BIGINT) - {off}) AS DOUBLE) * {d(cell_size)})"
+    y0 = f"(CAST(((cell % {shift}) - {off}) AS DOUBLE) * {d(cell_size)})"
     a_terms = []
     f_terms = []
     for b in range(sub * sub):
         sj, si = divmod(b, sub)  # row-major bit order (matches the kernel)
-        rx0 = x0 + F.lit(si * step)
-        ry0 = y0 + F.lit(sj * step)
-        ox = F.least(rx0 + F.lit(step), F.col("lxmax")) - F.greatest(rx0, F.col("lxmin"))
-        oy = F.least(ry0 + F.lit(step), F.col("lymax")) - F.greatest(ry0, F.col("lymin"))
-        a_b = (ox > 1e-9) & (oy > 1e-9)
-        f_b = a_b & (ox >= step - 1e-9) & (oy >= step - 1e-9)
-        a_terms.append(F.when(a_b, F.lit(1 << b)).otherwise(F.lit(0)))
-        f_terms.append(F.when(f_b, F.lit(1 << b)).otherwise(F.lit(0)))
-    rect_masks = (
-        cov.filter(F.col("rect"))
-        .withColumn("a_mask", sum(a_terms).cast("int"))
-        .withColumn("f_mask", sum(f_terms).cast("int"))
-        .select(*out_cols)
+        rx0 = f"({x0} + {d(si * step)})"
+        ry0 = f"({y0} + {d(sj * step)})"
+        ox = f"(least(({rx0} + {d(step)}), lxmax) - greatest({rx0}, lxmin))"
+        oy = f"(least(({ry0} + {d(step)}), lymax) - greatest({ry0}, lymin))"
+        a_b = f"(({ox} > {d(1e-9)}) AND ({oy} > {d(1e-9)}))"
+        f_b = f"(({a_b} AND ({ox} >= {d(step - 1e-9)})) AND ({oy} >= {d(step - 1e-9)}))"
+        a_terms.append(f"(CASE WHEN {a_b} THEN {1 << b} ELSE 0 END)")
+        f_terms.append(f"(CASE WHEN {f_b} THEN {1 << b} ELSE 0 END)")
+    rect_masks = cov.filter(F.col("rect")).select(
+        *keep,
+        F.expr(f"CAST(({' + '.join(a_terms)}) AS INT)").alias("a_mask"),
+        F.expr(f"CAST(({' + '.join(f_terms)}) AS INT)").alias("f_mask"),
     )
+    if gen_rows == 0:
+        return rect_masks
 
     # general polygons: the clip kernel, spread first (the cover explosion
     # often sits on top of a small AQE-coalesced shuffle)
-    gen = _repartition_for_kernel(cov.filter(~F.col("rect")))
+    gen = _repartition_for_kernel(cov.filter(~F.col("rect")), gen_rows)
     gen_masks = gen.withColumn("m", masks("xs", "ys", "nv", "cell")).select(
-        *[c for c in out_cols if c not in ("a_mask", "f_mask")],
+        *keep,
         F.col("m.a_mask").alias("a_mask"),
         F.col("m.f_mask").alias("f_mask"),
-    ).select(*out_cols)
+    )
     return rect_masks.unionByName(gen_masks)
 
 
@@ -1354,18 +1386,19 @@ def intersects_join_ri(
     # The mask families only ever DECIDE pairs with >= 1 non-rect side
     # (rect×rect is filtered out of the candidate set below), so a side's
     # masks/payloads are needed for its rect rows ONLY when the OTHER side
-    # has non-rect rows. Probe the eagerly-checkpointed covers (driver-side
-    # adaptive choice, same spirit as the count-guarded broadcasts): on an
-    # all-rect × all-rect input the whole mask/kernel pipeline folds away
-    # and the join is pure codegen bbox arithmetic (measured: 65k×65k
-    # rect-only warm 12.6 → ~6 s; the probe itself is a ms-scale scan of
-    # the in-memory checkpoint).
-    l_has_gen = lcov.filter(~F.col("rect")).limit(1).count() > 0
-    r_has_gen = rcov.filter(~F.col("rect")).limit(1).count() > 0
-    if not (l_has_gen or r_has_gen):
+    # has non-rect rows. Count each eagerly-checkpointed cover's non-rect
+    # rows (driver-side adaptive choice, same spirit as the count-guarded
+    # broadcasts): on an all-rect × all-rect input the whole mask/kernel
+    # pipeline folds away and the join is pure codegen bbox arithmetic
+    # (measured: 65k×65k rect-only warm 12.6 → ~6 s; the count itself is a
+    # ms-scale scan of the in-memory checkpoint). The same counts size the
+    # mask kernels' spread.
+    l_gen = lcov.filter(~F.col("rect")).count()
+    r_gen = rcov.filter(~F.col("rect")).count()
+    if not (l_gen or r_gen):
         return rect_pairs
-    lsrc = lcov if r_has_gen else lcov.filter(~F.col("rect"))
-    rsrc = rcov if l_has_gen else rcov.filter(~F.col("rect"))
+    lsrc = lcov if r_gen else lcov.filter(~F.col("rect"))
+    rsrc = rcov if l_gen else rcov.filter(~F.col("rect"))
 
     # ONE mask frame per side over the (possibly rect-pruned) cover — the
     # masks stream into a single cell join; no mask checkpoints, no
@@ -1374,7 +1407,7 @@ def intersects_join_ri(
     # rect×rect rows are dropped right after the join probe, BEFORE the
     # candidate checkpoint — they stream through codegen at ~ns/row and
     # never materialize.
-    lm = _masks_over_cover(lsrc, cell_size, sub).select(
+    lm = _masks_over_cover(lsrc, cell_size, sub, l_gen).select(
         F.col("id").alias("id_l"),
         F.col("rect").alias("rect_l"),
         "lxmin", "lymin", "lxmax", "lymax",
@@ -1382,7 +1415,7 @@ def intersects_join_ri(
         F.col("a_mask").alias("a_l"),
         F.col("f_mask").alias("f_l"),
     )
-    rm = _masks_over_cover(rsrc, cell_size, sub).select(
+    rm = _masks_over_cover(rsrc, cell_size, sub, r_gen).select(
         F.col("id").alias("id_r"),
         F.col("rect").alias("rect_r"),
         F.col("lxmin").alias("rxmin"),
@@ -1412,6 +1445,24 @@ def intersects_join_ri(
         "id_l", "id_r", F.lit("ri").alias("method")
     )
     ambiguous = cand.filter(~definite)
+
+    def finish(mask_pairs: DataFrame) -> DataFrame:
+        # rect_pairs is disjoint from the mask-join pair space AND already
+        # distinct, so only the mask families need the any-cell dedup — the
+        # rect family unions in WITHOUT re-shuffling through a global agg;
+        # method is 'rect' | 'ri' | 'exact'
+        return (
+            mask_pairs.groupBy("id_l", "id_r")
+            .agg(F.min("method").alias("method"))
+            .unionByName(rect_pairs)
+        )
+
+    # one count on the checkpointed candidates (it materializes them): when
+    # the masks decided every pair, the payload re-joins and the exact
+    # kernel fold away; otherwise the count sizes the kernel spread
+    n_amb = ambiguous.count()
+    if n_amb == 0:
+        return finish(yes)
 
     # non-rect ambiguous pairs: re-join flat ring payloads by id (the skinny
     # mask join never multiplied them through the per-cell pair explosion).
@@ -1468,20 +1519,11 @@ def intersects_join_ri(
         return pd.Series(out)
 
     exact = exact.asNondeterministic()
-    ambiguous = _repartition_for_kernel(ambiguous)
+    ambiguous = _repartition_for_kernel(ambiguous, n_amb)
     amb_yes = ambiguous.filter(
         exact("xs_l", "ys_l", "nv_l", "xs_r", "ys_r", "nv_r", "cell")
     ).select("id_l", "id_r", F.lit("exact").alias("method"))
-    # rect_pairs is disjoint from the mask-join pair space AND already
-    # distinct, so only the mask families need the any-cell dedup — the
-    # rect family unions in WITHOUT re-shuffling through a global agg;
-    # method is 'rect' | 'ri' | 'exact'
-    mask_pairs = (
-        yes.unionByName(amb_yes)
-        .groupBy("id_l", "id_r")
-        .agg(F.min("method").alias("method"))
-    )
-    return mask_pairs.unionByName(rect_pairs)
+    return finish(yes.unionByName(amb_yes))
 
 
 # ---------------------------------------------------------------------------

@@ -99,18 +99,22 @@ def test_asof_join_is_native_window(spark):
     assert "Window" in p
 
 
-def test_ri_rect_masks_native_equals_kernel(spark):
+@pytest.mark.parametrize("cell_size,sub", [(250.0, 4), (137.5, 3), (1000.0, 5)])
+def test_ri_rect_masks_native_equals_kernel(spark, cell_size, sub):
     """The native (Catalyst) rect mask arithmetic must produce EXACTLY the
     masks the clip kernel produces: encode the same rectangles once as
     4-vertex rings (native path) and once as 5-vertex rings with a split
     edge (geometrically identical, fails the rect gate → kernel path) and
-    compare per-(feature, cell) masks."""
+    compare per-(feature, cell) masks. The negative-coordinate rect crosses
+    both axes, so the cell decode's GRID_OFF arithmetic runs on cells on
+    either side of the origin."""
     import pandas as pd
 
     from lagespark.operators import spatial
 
     rects = [(0.0, 0.0, 310.0, 260.0), (100.0, 120.0, 480.0, 130.0),
-             (250.0, 250.0, 500.0, 500.0), (10.0, 10.0, 20.0, 490.0)]
+             (250.0, 250.0, 500.0, 500.0), (10.0, 10.0, 20.0, 490.0),
+             (-420.0, -175.0, 35.0, 90.0)]
 
     def pt(x, y):
         return {"x": x, "y": y}
@@ -125,12 +129,58 @@ def test_ri_rect_masks_native_equals_kernel(spark):
     cols = ["feature_id", "rings", "xmin", "ymin", "xmax", "ymax"]
     f4 = spark.createDataFrame(pd.DataFrame(rows4, columns=cols))
     f5 = spark.createDataFrame(pd.DataFrame(rows5, columns=cols))
-    m4 = spatial.ri_masks(f4, cell_size=250.0, sub=4).toPandas()
-    m5 = spatial.ri_masks(f5, cell_size=250.0, sub=4).toPandas()
+    m4 = spatial.ri_masks(f4, cell_size=cell_size, sub=sub).toPandas()
+    m5 = spatial.ri_masks(f5, cell_size=cell_size, sub=sub).toPandas()
     assert m4["rect"].all() and not m5["rect"].any()  # paths actually differ
     k4 = {(r.id, r.cell): (r.a_mask, r.f_mask) for r in m4.itertuples()}
     k5 = {(r.id, r.cell): (r.a_mask, r.f_mask) for r in m5.itertuples()}
     assert k4 == k5, "native rect masks diverge from the clip kernel"
+
+
+def test_small_kernel_stages_spread_to_parallelism(spark):
+    """The polygon-kernel spread is sized by the stage's row count: a tiny
+    mixed rect/octagon input runs overlay_join's and intersects_join_ri's
+    pandas-UDF stages on defaultParallelism partitions, not the 8×
+    oversubscription that only pays off at data scale."""
+    import math
+
+    import pandas as pd
+
+    from lagespark.operators import spatial
+
+    par = spark.sparkContext.defaultParallelism
+
+    def rect(fid, x0, y0, x1, y1):
+        ring = [{"x": x0, "y": y0}, {"x": x1, "y": y0},
+                {"x": x1, "y": y1}, {"x": x0, "y": y1}]
+        return (fid, [ring], x0, y0, x1, y1)
+
+    def octagon(fid, cx, cy, r):
+        ring = [{"x": cx + r * math.cos(k * math.pi / 4),
+                 "y": cy + r * math.sin(k * math.pi / 4)} for k in range(8)]
+        return (fid, [ring], cx - r, cy - r, cx + r, cy + r)
+
+    cols = ["feature_id", "rings", "xmin", "ymin", "xmax", "ymax"]
+    left = spark.createDataFrame(pd.DataFrame(
+        [rect("l0", 0.0, 0.0, 300.0, 300.0), octagon("l1", 150.0, 150.0, 100.0),
+         rect("l2", -260.0, -90.0, -20.0, 40.0)], columns=cols))
+    right = spark.createDataFrame(pd.DataFrame(
+        [rect("r0", 100.0, 100.0, 400.0, 400.0), octagon("r1", 260.0, 200.0, 80.0),
+         octagon("r2", -150.0, -30.0, 70.0)], columns=cols))
+    small, full = f"RoundRobinPartitioning({par})", f"RoundRobinPartitioning({8 * par})"
+    for df in (spatial.overlay_join(left, right),
+               spatial.intersects_join_ri(left, right)):
+        p = plan_of(df)
+        assert "ArrowEvalPython" in p  # the kernel stage is really there
+        assert small in p and full not in p
+    # the rule itself: floor par, ~KERNEL_ROWS_PER_TASK rows a task, cap 8·par
+    # (and 8·par for callers without a count)
+    per = spatial.KERNEL_ROWS_PER_TASK
+    base = spark.range(1)
+    for rows, want in [(0, par), (3, par), (per * (par + 1) + 1, par + 2),
+                       (per * 1000, 8 * par), (None, 8 * par)]:
+        got = plan_of(spatial._repartition_for_kernel(base, rows))
+        assert f"RoundRobinPartitioning({want})" in got, (rows, want)
 
 
 def test_overlay_join_cover_explosion_is_native(spark):

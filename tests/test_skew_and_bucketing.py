@@ -570,7 +570,11 @@ def test_knn_join_points_plan_no_cartesian(spark):
 def test_knn_join_points_fewer_targets_than_k(spark):
     """Targets with < k points can never satisfy the closure bound — after
     max_rounds the join must still emit the best-effort neighbors it found
-    rather than loop or drop the queries."""
+    rather than loop or drop the queries, and warn with the number of
+    unfinished queries. A query set that closes within max_rounds stays
+    silent."""
+    import warnings
+
     from lagespark.operators import spatial
 
     qs = spark.createDataFrame(
@@ -580,14 +584,29 @@ def test_knn_join_points_fewer_targets_than_k(spark):
         [(10, 120.0, 100.0), (11, 5100.0, 5000.0)], "pid long, x double, y double"
     )
     # enough rounds for the final ring (2^5 cells = 8 km) to span both
-    # clusters: every query ranks BOTH targets despite nc < k forever
-    out = spatial.knn_join_points(qs, ts, k=3, cell_size=250.0, max_rounds=6).toPandas()
+    # clusters: every query ranks BOTH targets despite nc < k forever — so
+    # both queries are still unfinished when max_rounds runs out
+    with pytest.warns(RuntimeWarning, match="with 2 unfinished queries"):
+        out = spatial.knn_join_points(
+            qs, ts, k=3, cell_size=250.0, max_rounds=6
+        ).toPandas()
     got = {(r.qid, r.nn_id, r.rank) for r in out.itertuples()}
     assert (1, 10, 1) in got and (1, 11, 2) in got
     assert (2, 11, 1) in got and (2, 10, 2) in got
     assert len(out) == 4
     # radius-limited best effort: with max_rounds=4 (2 km reach) each query
     # only sees its local target — documented exhaustion semantics
-    near = spatial.knn_join_points(qs, ts, k=3, cell_size=250.0, max_rounds=4).toPandas()
+    with pytest.warns(RuntimeWarning, match="with 2 unfinished queries"):
+        near = spatial.knn_join_points(
+            qs, ts, k=3, cell_size=250.0, max_rounds=4
+        ).toPandas()
     near_set = {(r.qid, r.nn_id, r.rank) for r in near.itertuples()}
     assert near_set == {(1, 10, 1), (2, 11, 1)}
+    # k=1 closes in the first rounds (each query's target is <= 100 m away)
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        one = spatial.knn_join_points(
+            qs, ts, k=1, cell_size=250.0, max_rounds=6
+        ).toPandas()
+    assert not [w for w in rec if "max_rounds" in str(w.message)]
+    assert {(r.qid, r.nn_id) for r in one.itertuples()} == {(1, 10), (2, 11)}
